@@ -23,15 +23,21 @@ Scale design (SURVEY.md §3.1 "Spark rebuild lifecycle"):
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import json
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from piperider_spark.functions.text import fingerprint
+from piperider_spark.operators import bpe, classifier, dedup, dsir, langid_model
 from piperider_spark.rules.heuristics import apply_rules
 from piperider_spark.rules.spec import DEFAULT_SPEC, RuleSpec
 
@@ -53,6 +59,11 @@ def build_decisions(df: DataFrame, spec: RuleSpec = DEFAULT_SPEC) -> DataFrame:
       evaluate a CASE-guarded scrub UDF unconditionally — UDF extraction).
     * ONE Arrow crossing total: text + one boolean in; lang/ppl/token
       stats/scrubbed out.
+
+    Input contract: ``turn_idx`` is unique within a conversation. With a
+    duplicate ``turn_idx`` the lag-1 duplicate-turn rule compares rows in
+    an unspecified order, so its result is undefined (the streaming filter
+    states the same).
     """
     from piperider_spark.rules.heuristics import duplicate_turn_col, rule_columns
     from piperider_spark.signals.udfs import make_process_udf
@@ -179,8 +190,6 @@ def _artifact_key(path: str) -> str:
     snapshot reprocesses" contract, which bare path identity cannot keep
     (review finding: epoch workflows that overwrite latest.bloom reused
     stale sidecars)."""
-    import hashlib
-
     h = hashlib.md5()
     if os.path.isdir(path):
         for root, dirs, files in sorted(os.walk(path)):
@@ -196,14 +205,365 @@ def _artifact_key(path: str) -> str:
     return f"{os.path.abspath(path)}@{h.hexdigest()[:12]}"
 
 
+def _artifact(arg: str, path: str) -> str:
+    """``_artifact_key`` of the artifact a ``run_pipeline`` argument names,
+    checked for existence first: a mistyped path fails here, naming the
+    argument, before staging writes anything."""
+    if not os.path.exists(path):
+        raise FileNotFoundError(f"{arg}: no artifact at {path!r}")
+    return _artifact_key(path)
+
+
 def _spec_sig(spec: RuleSpec) -> str:
     """Deterministic digest of the frozen rule thresholds — lineage rows
     carry it so resuming with a CHANGED RuleSpec reprocesses instead of
     serving decisions computed under the old policy (review finding: every
     other knob was tracked, the spec itself was not)."""
-    import hashlib
-
     return hashlib.md5(repr(spec).encode()).hexdigest()[:12]
+
+
+def _sidecar(
+    path: str, name: str, meta: dict, fit: Callable[[str], None], reuse: bool = True
+) -> bool:
+    """The reuse gate of every derived directory (staged input and stage
+    sidecars): keep ``path`` iff it committed (``_SUCCESS``) under an equal
+    ``_<name>_meta.json`` manifest — never on mere existence. Otherwise
+    ``fit(path)`` overwrites it and the manifest follows the commit.
+    Returns whether it wrote."""
+    meta_path = os.path.join(path, f"_{name}_meta.json")
+    if reuse and os.path.exists(os.path.join(path, "_SUCCESS")):
+        try:
+            with open(meta_path) as fh:
+                if json.load(fh) == meta:
+                    return False
+        except (OSError, ValueError):
+            pass
+    fit(path)
+    with open(meta_path, "w") as fh:
+        json.dump(meta, fh)
+    return True
+
+
+def _write_small(df: DataFrame, path: str) -> None:
+    """A fitted table (≤ a few thousand rows) as one tiny file."""
+    df.coalesce(1).write.mode("overwrite").parquet(path)
+
+
+def _write_by_bucket(df: DataFrame, path: str, overwrite: str = "static") -> None:
+    """Overwrite ``path`` partitioned by ``bucket``: the whole directory
+    (``"static"``), or only the buckets ``df`` holds (``"dynamic"``)."""
+    (
+        df.repartition("bucket")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", overwrite)
+        .partitionBy("bucket")
+        .parquet(path)
+    )
+
+
+def _epoch_snapshot(hist: dict | None, build, expected: int | None, out: str) -> None:
+    """Write the next epoch's Bloom snapshot: history ∪ this corpus in the
+    history's layout; the first epoch (no history) sizes the layout from
+    ``expected``. Derived from the staged input and the history artifact
+    only, so a resumed or no-op run rewrites the same content (save_bloom
+    renames atomically)."""
+    cur = build(
+        expected=None if hist else expected,
+        fpp=hist["fpp"] if hist else 0.01,
+        layout=(hist["m_bits"], hist["k"]) if hist else None,
+    )
+    dedup.save_bloom(dedup.bloom_or(hist, cur) if hist else cur, out)
+
+
+@dataclass
+class _Stage:
+    """One optional stage of ``run_pipeline`` (its docstring states the
+    contract they share). ``mode`` is the stage's identity, "none" when
+    off; lineage records it as ``<name>_mode`` and the sidecar manifest is
+    ``_<name>_meta.json``."""
+
+    name: str
+    mode: str
+    # per-wave projection: (wave input, loaded state, wave buckets) → input
+    apply: Callable[[DataFrame, Any, list[int]], DataFrame]
+    load: Callable[[str], Any]  # artifact or sidecar path → state for apply
+    out_cols: tuple[str, ...] = ()  # columns it adds to decisions/
+    artifact: str | None = None  # externally supplied artifact, loaded as is
+    sidecar: str | None = None  # else `fit` writes this dir under output_dir
+    fit: Callable[[DataFrame, str], None] | None = None  # (staged input, sidecar path)
+    # after the waves, whether or not the stage is on: (staged input, state)
+    finish: Callable[[DataFrame, Any], None] | None = None
+
+
+_DUP_SCHEMA = (
+    "conv_id string, canonical_conv_id string, fp string, "
+    "group_size long, method string, bucket int"
+)
+
+
+def _dedup_stage(
+    spark: SparkSession,
+    n_buckets: int,
+    exact: bool,
+    near: bool,
+    threshold: float,
+    history: str | None,
+    out: str | None,
+    expected: int | None,
+) -> _Stage:
+    mode = "+".join(
+        part
+        for part in (
+            "exact" if exact else "",
+            f"near:{threshold}" if near else "",
+            f"bloom:{_artifact('bloom_history', history)}" if history else "",
+        )
+        if part
+    )
+
+    def fit(src: DataFrame, path: str) -> None:
+        # ONE corpus-wide pass. Exact leg: conversation rollup (single
+        # shuffle on conv_id, map-side partial collect_list) + fingerprint
+        # groupBy on a 16-byte key + join back. Near leg: MinHash-LSH pairs
+        # over the rollup (bucket-capped banded join, exact-Jaccard verify
+        # — eager-materializing) + label-propagation components; canonical
+        # = the cluster's min conv_id, matching the exact leg's policy.
+        legs = []
+        # the conversation rollup (one shuffle on conv_id) is shared by the
+        # exact and bloom legs; persist only when both consume it
+        rolled = dedup.conversation_text(src, sep="\x1e") if (exact or history) else None
+        if exact and history:
+            rolled = rolled.persist()
+        if exact:
+            convs = rolled.select("conv_id", fingerprint("conv_text").alias("fp"))
+            stats = convs.groupBy("fp").agg(
+                F.count(F.lit(1)).alias("group_size"),
+                F.min("conv_id").alias("canonical_conv_id"),
+            )
+            legs.append(
+                convs.join(stats, "fp")
+                .where(
+                    (F.col("group_size") > 1)
+                    & (F.col("conv_id") != F.col("canonical_conv_id"))
+                )
+                .select(
+                    "conv_id",
+                    "canonical_conv_id",
+                    "fp",
+                    "group_size",
+                    F.lit("exact").alias("method"),
+                )
+            )
+        if near:
+            pairs = dedup.conversation_near_dup_pairs(src, threshold=threshold)
+            clusters = dedup.connected_components(pairs, id_a="id_a", id_b="id_b")
+            sizes = clusters.groupBy("cluster_id").agg(
+                F.count(F.lit(1)).alias("group_size")
+            )
+            legs.append(
+                clusters.where(F.col("id") != F.col("cluster_id"))
+                .join(sizes, "cluster_id")
+                .select(
+                    F.col("id").alias("conv_id"),
+                    F.col("cluster_id").alias("canonical_conv_id"),
+                    F.lit(None).cast("string").alias("fp"),
+                    "group_size",
+                    F.lit("near").alias("method"),
+                )
+            )
+        if history:
+            # cross-run leg: probe each conversation's transcript
+            # fingerprint against the history snapshot — map-side (one
+            # conv rollup shuffle, ZERO shuffle against the archive).
+            # canonical_conv_id is NULL: the keeper lives in a previous
+            # epoch's output. group_size NULL likewise (unknown here).
+            legs.append(
+                dedup.bloom_seen_flags(rolled, dedup.load_bloom(history), text_col="conv_text")
+                .where(F.col("maybe_seen"))
+                .select(
+                    "conv_id",
+                    F.lit(None).cast("string").alias("canonical_conv_id"),
+                    fingerprint("conv_text").alias("fp"),
+                    F.lit(None).cast("long").alias("group_size"),
+                    F.lit("bloom_history").alias("method"),
+                )
+            )
+        dups = legs[0]
+        for leg in legs[1:]:
+            dups = dups.unionByName(leg)
+        # bucket is a pure function of conv_id, so the sidecar partitions
+        # align with the staged input's
+        _write_by_bucket(dups.withColumn("bucket", _bucket_col(n_buckets)), path)
+        if exact and history:
+            rolled.unpersist()
+
+    def apply(part: DataFrame, dups: DataFrame, wave: list[int]) -> DataFrame:
+        # left-anti on conv_id: both sides pruned to this wave's buckets; no
+        # broadcast hint — the dup list is usually tiny (AQE broadcasts it)
+        # but is corpus-shaped in the worst case
+        wave_dups = dups.where(F.col("bucket").isin(wave)).select("conv_id")
+        return part.join(wave_dups, "conv_id", "left_anti")
+
+    def finish(src: DataFrame, _: Any) -> None:
+        build = functools.partial(
+            dedup.build_fingerprint_bloom,
+            dedup.conversation_text(src, sep="\x1e"),
+            text_col="conv_text",
+        )
+        hist = dedup.load_bloom(history) if history else None
+        _epoch_snapshot(hist, build, expected, out)
+
+    return _Stage(
+        "dedup",
+        mode or "none",
+        apply,
+        # explicit schema: a dup-free corpus writes a file-less sidecar
+        # (only _SUCCESS), which schema inference cannot read
+        load=lambda path: spark.read.schema(_DUP_SCHEMA).parquet(path),
+        sidecar="dup_convs",
+        fit=fit,
+        finish=finish if out else None,
+    )
+
+
+def _mode(arg: str, path: str | None, fitted: str | None) -> str:
+    """``path:<artifact identity>`` for a stage that loads ``path``, else
+    ``fitted`` (the identity of its in-run fit), else "none"."""
+    return f"path:{_artifact(arg, path)}" if path else fitted or "none"
+
+
+def _dsir_stage(
+    spark: SparkSession, predicate: str | None, ratio_path: str | None, n: int
+) -> _Stage:
+    mode = _mode("dsir_ratio_path", ratio_path, predicate and f"fit:{predicate}")
+
+    def fit(src: DataFrame, path: str) -> None:
+        target = src.where(F.expr(predicate))
+        _write_small(dsir.fit_bucket_log_ratio(src, target, text_col="text", n_buckets=n), path)
+
+    return _Stage(
+        "dsir",
+        mode if mode == "none" else f"{mode}:{n}",
+        lambda part, arr, wave: part.withColumn("dsir_score", dsir.dsir_score_col("text", arr)),
+        # bounded collect (≤ n rows) → one array literal in every wave's plan
+        load=lambda path: dsir.log_ratio_array(spark.read.parquet(path), n_buckets=n),
+        out_cols=("dsir_score",),
+        artifact=ratio_path,
+        sidecar="dsir_ratio",
+        fit=fit,
+    )
+
+
+def _substr_stage(
+    spark: SparkSession,
+    history: str | None,
+    out: str | None,
+    expected: int | None,
+    k_tokens: int,
+) -> _Stage:
+    def load(path: str) -> tuple[dict, Any]:
+        bloom = dedup.load_bloom(path)
+        if bloom.get("grain") != "window":
+            raise ValueError(
+                f"--substr-bloom-history needs a window-grain artifact "
+                f"(build_window_bloom), got grain="
+                f"{bloom.get('grain', 'fingerprint')!r} from {path}"
+            )
+        # ONE broadcast of the (potentially GB-scale) bitset for the whole
+        # run — window_seen_stats would otherwise re-broadcast it every wave
+        return bloom, spark.sparkContext.broadcast(bloom["bits"])
+
+    def apply(part: DataFrame, state: tuple[dict, Any], wave: list[int]) -> DataFrame:
+        bloom, bits_bc = state
+        return (
+            dedup.window_seen_stats(
+                part, bloom, k_tokens=int(bloom["k_tokens"]), bits_bc=bits_bc
+            )
+            .withColumnRenamed("seen_frac", "substr_seen_frac")
+            .drop("n_tokens", "seen_windows", "seen_token_cov")
+        )
+
+    def finish(src: DataFrame, state: tuple[dict, Any] | None) -> None:
+        # epoch 1 sets k_tokens + layout, later epochs inherit both
+        hist = state[0] if state else None
+        k = int(hist["k_tokens"]) if hist else k_tokens
+        build = functools.partial(dedup.build_window_bloom, src, k_tokens=k)
+        _epoch_snapshot(hist, build, expected, out)
+
+    return _Stage(
+        "substr",
+        f"bloom:{_artifact('substr_bloom_history', history)}" if history else "none",
+        apply,
+        load,
+        out_cols=("substr_seen_frac",),
+        artifact=history,
+        finish=finish if out else None,
+    )
+
+
+def _bpe_stage(spark: SparkSession, path: str | None, n_merges: int | None) -> _Stage:
+    def fit(src: DataFrame, out: str) -> None:
+        counts = bpe.bpe_word_counts(src, "text", min_count=2, top_words=50_000)
+        merges = bpe.train_bpe(counts, n_merges=int(n_merges))
+        _write_small(bpe.merges_to_df(spark, merges), out)
+
+    return _Stage(
+        "bpe",
+        _mode("bpe_merges_path", path, n_merges and f"train:{int(n_merges)}"),
+        lambda part, merges, wave: part.withColumn(
+            "n_bpe_subwords", bpe.bpe_subword_count_col(merges, "text")
+        ),
+        load=lambda p: bpe.load_merges(spark, p),
+        out_cols=("n_bpe_subwords",),
+        artifact=path,
+        sidecar="bpe_merges",
+        fit=fit,
+    )
+
+
+def _clf_stage(
+    spark: SparkSession, spec: RuleSpec, path: str | None, epochs: int | None
+) -> _Stage:
+    def fit(src: DataFrame, out: str) -> None:
+        # self-distillation: the frozen spec's keep labels
+        labeled = build_decisions(src, spec).select("text", "keep")
+        model = classifier.fit_quality_classifier(labeled, epochs=int(epochs))
+        _write_small(classifier.model_to_df(spark, model), out)
+
+    return _Stage(
+        "clf",
+        _mode("clf_model_path", path, epochs and f"train:{int(epochs)}"),
+        lambda part, model, wave: part.withColumn(
+            "clf_score", classifier.classifier_score_col("text", model)
+        ),
+        load=lambda p: classifier.model_from_df(spark.read.parquet(p)),
+        out_cols=("clf_score",),
+        artifact=path,
+        sidecar="clf_model",
+        fit=fit,
+    )
+
+
+def _langid_stage(
+    spark: SparkSession, spec: RuleSpec, path: str | None, epochs: int | None
+) -> _Stage:
+    def fit(src: DataFrame, out: str) -> None:
+        # distills the frozen heuristic's lang labels
+        labeled = build_decisions(src, spec).select("text", "lang")
+        model = langid_model.fit_langid_model(labeled, label_col="lang", epochs=int(epochs))
+        _write_small(langid_model.langid_model_to_df(spark, model), out)
+
+    return _Stage(
+        "langid",
+        _mode("langid_model_path", path, epochs and f"train:{int(epochs)}"),
+        # the frozen `lang` column is untouched: ft_lang rides next to it
+        lambda part, model, wave: langid_model.langid_scored(part, model, "text"),
+        load=lambda p: langid_model.langid_model_from_df(spark.read.parquet(p)),
+        out_cols=("ft_lang", "ft_lang_prob"),
+        artifact=path,
+        sidecar="langid_model",
+        fit=fit,
+    )
 
 
 def run_pipeline(
@@ -241,7 +601,8 @@ def run_pipeline(
 
     Outputs under ``output_dir``:
       decisions/      conv_id, turn_idx, role, ts, keep, reasons, lang, ppl,
-                      text_scrubbed — partitioned by bucket
+                      text_scrubbed (+ the active stages' columns) —
+                      partitioned by bucket
       metrics/        per-bucket PipeRider-style profile rows
       lineage/        one row per completed (run, bucket)
       conversations/  (when ``conv_rollup``) conversation-grain stats +
@@ -251,108 +612,63 @@ def run_pipeline(
                       (conv_id, canonical_conv_id, fp, group_size, method)
                       — the audit record of what dedup removed
 
-    ``conv_dedup`` drops exactly-duplicated conversations (stable-turn-order
-    transcript fingerprint, \\x1e-joined so turn boundaries stay in the key)
-    before the keep/drop rules run; ``conv_near_dedup`` additionally drops
-    NEAR-duplicate conversations — MinHash-LSH pairs over the whole
-    transcript at ``conv_near_threshold`` Jaccard, clustered with
-    label-propagation connected components, keeping each cluster's
-    lexically-first conv_id (the same canonical policy as the exact stage).
-    Only canonical conversations flow into decisions/.
+    Six optional stages ride the waves, all off by default: dedup, DSIR,
+    substring Bloom, BPE, classifier and learned langid. They share one
+    contract:
+    * Mode. A stage's arguments reduce to a mode string ("none" = off). A
+      loaded artifact enters it by content identity (path + listing
+      digest), so an artifact swapped in place counts as a new mode; a
+      missing artifact raises FileNotFoundError naming the argument before
+      anything is written.
+    * Fit once per staging. A stage that learns from the corpus writes its
+      sidecar directory under ``output_dir`` once and reuses it while the
+      sidecar's ``_<stage>_meta.json`` records the same mode. A restage
+      (new input, new ``n_buckets`` or ``resume=False``) purges every
+      sidecar along with the outputs and lineage.
+    * Resume. Lineage rows record every stage's mode as ``<stage>_mode``.
+      A bucket is done only if its LATEST lineage row matches the current
+      modes, the RuleSpec digest and, with ``conv_rollup``, the rollup
+      fraction, so a mode flip reprocesses rather than mixing outputs.
+    * Zero shuffle per wave. Each stage is a row-local projection of the
+      wave's input (dedup: an anti-join pruned to the wave's buckets); a
+      fitted table rides the plan as a literal or a broadcast.
 
-    The duplicate list is computed ONCE per staging+mode (the sidecar
-    carries a mode manifest and is rebuilt when the dedup mode changes),
-    written partitioned by bucket, and each wave anti-joins only its own
-    buckets' slice — the join stays pruned and AQE broadcasts it when
-    small, so dedup adds no per-wave full-corpus work. Lineage rows record
-    the dedup MODE: resuming with a different mode reprocesses buckets
-    rather than mixing differently-deduped decisions in one output.
-
-    ``bloom_history`` extends dedup ACROSS runs: a Bloom snapshot of
-    previous epochs' conversation fingerprints (operators/dedup.save_bloom
-    artifact) gates this corpus map-side — conversations whose stable-order
-    transcript fingerprint probes seen are dropped like exact duplicates
-    (method ``bloom_history`` in dup_convs/, canonical_conv_id NULL: the
-    canonical was emitted by an earlier epoch). Zero shuffle against
-    history — the 10^12-turn archive never re-keys; ~fpp of genuinely-new
-    conversations are falsely dropped (the artifact records its fpp).
-    ``bloom_out`` writes the next epoch's snapshot (history ∪ this corpus,
-    same bitset layout) after the waves complete; on the FIRST epoch (no
-    history) pass ``bloom_expected`` sized for the archive's growth horizon
-    — every later epoch inherits that layout, and a filter sized only for
-    epoch 1 saturates (fpp →1) as insertions accumulate. The history
-    artifact's identity joins the lineage dedup mode, so resuming against
-    a different snapshot reprocesses buckets.
-
-    ``dsir_fit`` (a SQL predicate over the input columns selecting the
-    TARGET slice, e.g. ``"role = 'assistant'"``) fits a DSIR importance
-    model ONCE per staging (operators/dsir.py — two B-bounded aggs, the
-    log-ratio table written to dsir_ratio/ as an audit record) and adds a
-    ``dsir_score`` column to decisions/; ``dsir_ratio_path`` instead loads
-    an externally-fitted table (the production shape: fit offline on a
-    trusted target corpus, score everywhere). Scoring is a zero-shuffle
-    row-local projection (the ≤``dsir_buckets``-row table rides the plan
-    as one array literal), so the stage adds no per-wave exchanges.
-    Lineage records the DSIR mode like the dedup mode: resuming with a
-    different fit/ratio reprocesses rather than mixing scores.
-
-    ``substr_bloom_history`` extends the gate below conversation grain: a
-    WINDOW-grain Bloom snapshot (operators/dedup.build_window_bloom
-    artifact — history's k-token-window hashes) adds a
-    ``substr_seen_frac`` column to decisions/: the fraction of each turn's
-    tokens covered by substrings already present in the archive (merged
-    k-token windows, case-insensitive). Zero shuffle — row-local JVM
-    window hashes + one broadcast-bitset Arrow probe riding the wave plan,
-    never a join against history. Score, not drop: substring overlap is a
-    quality signal (boilerplate, quoted context, templated turns), and the
-    cut belongs downstream with the other signals. ``substr_bloom_out``
-    writes the next epoch's window snapshot (history ∪ this corpus' turn
-    windows, inherited layout; epoch 1 sizes via
-    ``substr_bloom_expected``/``substr_bloom_k``). Lineage records the
-    substring mode like the others: a history flip reprocesses.
-
-    ``clf_train`` distills the rule layer into a learned quality
-    classifier ONCE per staging: the frozen spec's keep labels (one
-    build_decisions pass over the staged input) train a hashed-n-gram
-    logistic regression for that many epochs (operators/classifier.py —
-    one B-bounded shuffle per epoch, exact decimal gradients), the
-    (bucket, weight) artifact is written to clf_model/, and decisions
-    gain a ``clf_score`` column — the keep-probability under the learned
-    model, scored as a zero-shuffle sigmoid projection. ``clf_model_path``
-    instead loads an externally-trained artifact (one frozen classifier
-    across epochs — the production shape). Lineage records the classifier
-    mode like the others: swapping or dropping it reprocesses.
-
-    ``langid_train`` distills the frozen langid heuristic into the
-    fastText-style learned model ONCE per staging: the heuristic's
-    ``lang`` labels (the same build_decisions pass the classifier uses)
-    train the hashed char+word n-gram softmax for that many epochs
-    (operators/langid_model.py — one bounded shuffle per epoch, exact
-    decimal gradients), the (bucket, class, weight) artifact is written
-    to langid_model/, and decisions gain ``ft_lang`` / ``ft_lang_prob``
-    columns — the learned model's prediction scored as a zero-shuffle
-    projection NEXT TO the frozen ``lang`` column (the frozen column
-    stays byte-identical: the learned model occupies the documented
-    swap seam without touching the keep/drop contract).
-    ``langid_model_path`` instead loads an externally-trained artifact
-    (the production shape — e.g. fitted on a genuinely multilingual
-    corpus, where the linear model separates; the synthetic teacher
-    labels here exercise the plumbing). Lineage records the langid mode
-    like the others: swapping or dropping it reprocesses.
-
-    ``bpe_train`` learns a BPE tokenizer of that many merges ONCE per
-    staging (operators/bpe.py — ONE word-count shuffle, then the driver
-    merge loop over the Heaps'-bounded frequency table; the merge table is
-    written to bpe_merges/ as the shippable artifact) and adds an
-    ``n_bpe_subwords`` column to decisions/ — each turn's model-token
-    count under the learned vocabulary, the number token-budget packing
-    and cost accounting run on. ``bpe_merges_path`` instead loads an
-    externally-trained artifact (the production shape: one frozen
-    tokenizer across epochs). Scoring is a zero-shuffle stateless
-    projection (JVM pre-tokenization + one Arrow crossing returning just
-    the count). Lineage records the BPE mode like the others: swapping or
-    dropping the tokenizer reprocesses rather than mixing counts from
-    different vocabularies."""
+    The stages:
+    * Dedup (sidecar dup_convs/). ``conv_dedup`` drops exactly-duplicated
+      conversations (stable-turn-order transcript fingerprint, \\x1e-joined
+      so turn boundaries stay in the key); ``conv_near_dedup`` also drops
+      NEAR-duplicates (MinHash-LSH at ``conv_near_threshold`` Jaccard +
+      label-propagation components). Each cluster keeps its lexically-first
+      conv_id. ``bloom_history`` dedups ACROSS runs: conversations whose
+      fingerprint probes seen in a previous epoch's Bloom snapshot
+      (operators/dedup.save_bloom) are dropped (method ``bloom_history``,
+      canonical NULL) with zero shuffle against the archive; ~fpp of new
+      conversations are falsely dropped. ``bloom_out`` writes the next
+      epoch's snapshot (history ∪ this corpus, inherited layout) after the
+      waves; on the first epoch ``bloom_expected`` sizes it for the
+      archive's growth horizon.
+    * DSIR (sidecar dsir_ratio/). ``dsir_fit``, a SQL predicate selecting
+      the TARGET slice (e.g. ``"role = 'assistant'"``), fits the
+      ``dsir_buckets``-bucket log-ratio table; ``dsir_ratio_path`` loads
+      an externally fitted one. Adds ``dsir_score``.
+    * Substring Bloom. ``substr_bloom_history``, a WINDOW-grain snapshot
+      (operators/dedup.build_window_bloom), adds ``substr_seen_frac``: the
+      fraction of each turn's tokens covered by k-token windows already in
+      the archive. A score, not a drop. ``substr_bloom_out`` writes the
+      next epoch's window snapshot; epoch 1 sizes it from
+      ``substr_bloom_expected`` / ``substr_bloom_k``.
+    * BPE (sidecar bpe_merges/). ``bpe_train`` learns that many merges
+      (one word-count shuffle, then the driver merge loop);
+      ``bpe_merges_path`` loads a merge table. Adds ``n_bpe_subwords``,
+      each turn's model-token count.
+    * Classifier (sidecar clf_model/). ``clf_train`` distills the frozen
+      spec's keep labels into a hashed-n-gram logistic regression for that
+      many epochs; ``clf_model_path`` loads one. Adds ``clf_score``, the
+      learned keep-probability.
+    * Learned langid (sidecar langid_model/). ``langid_train`` distills the
+      frozen heuristic's ``lang`` labels into the fastText-style n-gram
+      softmax; ``langid_model_path`` loads one. Adds ``ft_lang`` /
+      ``ft_lang_prob`` next to the untouched frozen ``lang``."""
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     run_id = run_id or uuid.uuid4().hex[:12]
@@ -360,7 +676,26 @@ def run_pipeline(
     metrics_path = os.path.join(output_dir, "metrics")
     lineage_path = os.path.join(output_dir, "lineage")
     staged_path = os.path.join(output_dir, "staged")
-    dup_convs_path = os.path.join(output_dir, "dup_convs")
+    conversations_path = os.path.join(output_dir, "conversations")
+
+    # List order = order of the decisions/ columns, the lineage mode
+    # columns and the per-wave projections. Built before staging, so a
+    # missing artifact fails before anything is written.
+    stages = [
+        _dedup_stage(
+            spark, n_buckets, conv_dedup, conv_near_dedup, conv_near_threshold,
+            bloom_history, bloom_out, bloom_expected,
+        ),
+        _dsir_stage(spark, dsir_fit, dsir_ratio_path, dsir_buckets),
+        _substr_stage(
+            spark, substr_bloom_history, substr_bloom_out,
+            substr_bloom_expected, substr_bloom_k,
+        ),
+        _bpe_stage(spark, bpe_merges_path, bpe_train),
+        _clf_stage(spark, spec, clf_model_path, clf_train),
+        _langid_stage(spark, spec, langid_model_path, langid_train),
+    ]
+    active = [s for s in stages if s.mode != "none"]
 
     # Stage the input ONCE, partitioned by bucket, so every wave (and every
     # resume) prunes to its bucket directories at the scan. The previous
@@ -368,475 +703,103 @@ def run_pipeline(
     # each wave re-scanned the full input (O(waves) scans; at the documented
     # 10^4-bucket scale that is the pipeline's dominant cost). One extra
     # full write buys O(1) scans of each byte. Reuse is gated on a staging
-    # manifest (input path + n_buckets), never on mere existence: a resumed
-    # run must not silently read stale data staged from a different input
-    # or with a different bucket modulus, and resume=False always restages.
-    staging_meta = {"input_path": _input_key(input_path), "n_buckets": n_buckets}
-    meta_path = os.path.join(staged_path, "_staging_meta.json")
-    reuse = resume and os.path.exists(os.path.join(staged_path, "_SUCCESS"))
-    if reuse:
-        try:
-            with open(meta_path) as fh:
-                reuse = json.load(fh) == staging_meta
-        except (OSError, ValueError):
-            reuse = False
-    if not reuse:
-        (
-            read_input(spark, input_path)
-            .withColumn("bucket", _bucket_col(n_buckets))
-            .repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(staged_path)
-        )
-        with open(meta_path, "w") as fh:
-            json.dump(staging_meta, fh)
-        # Restaging means the prior run's work does not apply (different
-        # input, different modulus, or an explicit fresh run) — clear ALL
+    # manifest (input path + n_buckets): a resumed run must not silently
+    # read stale data staged from a different input or with a different
+    # bucket modulus, and resume=False always restages.
+    restaged = _sidecar(
+        staged_path,
+        "staging",
+        {"input_path": _input_key(input_path), "n_buckets": n_buckets},
+        lambda path: _write_by_bucket(
+            read_input(spark, input_path).withColumn("bucket", _bucket_col(n_buckets)), path
+        ),
+        reuse=resume,
+    )
+    if restaged:
+        # Restaging means the prior run's work does not apply — clear ALL
         # prior outputs. Stale lineage would mark buckets done and return
-        # the old outputs wholesale; stale decisions/metrics partitions
-        # would survive dynamic overwrite wherever the new input happens to
-        # put zero rows in a bucket the old input populated.
-        import shutil
-
+        # the old outputs wholesale; stale decisions/metrics/conversations
+        # partitions would survive dynamic overwrite wherever the new input
+        # puts zero rows in a bucket the old input populated; a sidecar's
+        # gate records only its mode, so it would serve a fit of the OLD
+        # corpus.
         for stale in (
             lineage_path,
             decisions_path,
             metrics_path,
-            dup_convs_path,
-            os.path.join(output_dir, "dsir_ratio"),
-            # every trained-on-this-staging sidecar: their reuse gates
-            # record only the MODE, so after an input change they would
-            # match and serve artifacts fitted on the OLD corpus
-            os.path.join(output_dir, "bpe_merges"),
-            os.path.join(output_dir, "clf_model"),
-            os.path.join(output_dir, "langid_model"),
-            # conversations/ rollup partitions from the old input survive
-            # dynamic overwrite wherever the new input leaves a bucket empty
-            os.path.join(output_dir, "conversations"),
+            conversations_path,
+            *(os.path.join(output_dir, s.sidecar) for s in stages if s.sidecar),
         ):
             shutil.rmtree(stale, ignore_errors=True)
     src = spark.read.parquet(staged_path)
 
-    dedup_mode = (
-        "+".join(
-            part
-            for part in (
-                "exact" if conv_dedup else "",
-                f"near:{conv_near_threshold}" if conv_near_dedup else "",
-                f"bloom:{_artifact_key(bloom_history)}" if bloom_history else "",
-            )
-            if part
-        )
-        or "none"
-    )
-    dup_schema = (
-        "conv_id string, canonical_conv_id string, fp string, "
-        "group_size long, method string, bucket int"
-    )
-    dup_meta_path = os.path.join(dup_convs_path, "_dedup_meta.json")
-    dup_reuse = os.path.exists(os.path.join(dup_convs_path, "_SUCCESS"))
-    if dup_reuse:
-        try:
-            with open(dup_meta_path) as fh:
-                dup_reuse = json.load(fh) == {"mode": dedup_mode}
-        except (OSError, ValueError):
-            dup_reuse = False
-    if dedup_mode != "none" and not dup_reuse:
-        # ONE corpus-wide pass per staging+mode. Exact leg: conversation
-        # rollup (single shuffle on conv_id, map-side partial collect_list)
-        # + fingerprint groupBy on a 16-byte key + join back. Near leg:
-        # MinHash-LSH pairs over the rollup (bucket-capped banded join,
-        # exact-Jaccard verify — eager-materializing) + label-propagation
-        # components; canonical = the cluster's min conv_id, matching the
-        # exact leg's policy. bucket is recomputed from conv_id (pure
-        # function), so the sidecar partitions align with the staged input
-        # and each wave reads only its own directories.
-        from piperider_spark.functions.text import fingerprint
-        from piperider_spark.operators.dedup import (
-            connected_components,
-            conversation_near_dup_pairs,
-            conversation_text,
-        )
-
-        legs = []
-        # the conversation rollup (one shuffle on conv_id) is shared by the
-        # exact and bloom legs; persist only when both consume it
-        rolled = (
-            conversation_text(src, sep="\x1e") if (conv_dedup or bloom_history) else None
-        )
-        if conv_dedup and bloom_history:
-            rolled = rolled.persist()
-        if conv_dedup:
-            convs = rolled.select("conv_id", fingerprint("conv_text").alias("fp"))
-            stats = convs.groupBy("fp").agg(
-                F.count(F.lit(1)).alias("group_size"),
-                F.min("conv_id").alias("canonical_conv_id"),
-            )
-            legs.append(
-                convs.join(stats, "fp")
-                .where(
-                    (F.col("group_size") > 1)
-                    & (F.col("conv_id") != F.col("canonical_conv_id"))
-                )
-                .select(
-                    "conv_id",
-                    "canonical_conv_id",
-                    "fp",
-                    "group_size",
-                    F.lit("exact").alias("method"),
-                )
-            )
-        if conv_near_dedup:
-            pairs = conversation_near_dup_pairs(
-                src, threshold=conv_near_threshold
-            )
-            clusters = connected_components(pairs, id_a="id_a", id_b="id_b")
-            sizes = clusters.groupBy("cluster_id").agg(
-                F.count(F.lit(1)).alias("group_size")
-            )
-            legs.append(
-                clusters.where(F.col("id") != F.col("cluster_id"))
-                .join(sizes, "cluster_id")
-                .select(
-                    F.col("id").alias("conv_id"),
-                    F.col("cluster_id").alias("canonical_conv_id"),
-                    F.lit(None).cast("string").alias("fp"),
-                    "group_size",
-                    F.lit("near").alias("method"),
-                )
-            )
-        if bloom_history:
-            # cross-run leg: probe each conversation's transcript
-            # fingerprint against the history snapshot — map-side (one
-            # conv rollup shuffle, ZERO shuffle against the archive).
-            # canonical_conv_id is NULL: the keeper lives in a previous
-            # epoch's output. group_size NULL likewise (unknown here).
-            from piperider_spark.operators.dedup import bloom_seen_flags, load_bloom
-
-            hist_bloom = load_bloom(bloom_history)
-            legs.append(
-                bloom_seen_flags(rolled, hist_bloom, text_col="conv_text")
-                .where(F.col("maybe_seen"))
-                .select(
-                    "conv_id",
-                    F.lit(None).cast("string").alias("canonical_conv_id"),
-                    fingerprint("conv_text").alias("fp"),
-                    F.lit(None).cast("long").alias("group_size"),
-                    F.lit("bloom_history").alias("method"),
-                )
-            )
-        dups = legs[0]
-        for leg in legs[1:]:
-            dups = dups.unionByName(leg)
-        (
-            dups.withColumn("bucket", _bucket_col(n_buckets))
-            .repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(dup_convs_path)
-        )
-        with open(dup_meta_path, "w") as fh:
-            json.dump({"mode": dedup_mode}, fh)
-        if conv_dedup and bloom_history:
-            rolled.unpersist()
-
-    if dsir_ratio_path:
-        dsir_mode = f"path:{_artifact_key(dsir_ratio_path)}:{dsir_buckets}"
-    elif dsir_fit:
-        dsir_mode = f"fit:{dsir_fit}:{dsir_buckets}"
-    else:
-        dsir_mode = "none"
-    dsir_arr: list[float] | None = None
-    if dsir_mode != "none":
-        from piperider_spark.operators import dsir as _dsir
-
-        if dsir_ratio_path:
-            ratio_src = dsir_ratio_path
-        else:
-            # fit ONCE per staging+predicate; the B-bounded log-ratio table
-            # is written as an audit record (same sidecar contract as
-            # dup_convs: meta manifest + reuse gated on the mode string)
-            ratio_src = os.path.join(output_dir, "dsir_ratio")
-            ratio_meta_path = os.path.join(ratio_src, "_dsir_meta.json")
-            ratio_reuse = os.path.exists(os.path.join(ratio_src, "_SUCCESS"))
-            if ratio_reuse:
-                try:
-                    with open(ratio_meta_path) as fh:
-                        ratio_reuse = json.load(fh) == {"mode": dsir_mode}
-                except (OSError, ValueError):
-                    ratio_reuse = False
-            if not ratio_reuse:
-                (
-                    _dsir.fit_bucket_log_ratio(
-                        src,
-                        src.where(F.expr(dsir_fit)),
-                        text_col="text",
-                        n_buckets=dsir_buckets,
-                    )
-                    .coalesce(1)  # ≤ dsir_buckets rows — one tiny file
-                    .write.mode("overwrite")
-                    .parquet(ratio_src)
-                )
-                with open(ratio_meta_path, "w") as fh:
-                    json.dump({"mode": dsir_mode}, fh)
-        # bounded collect (≤ dsir_buckets rows) → one array literal shared
-        # by every wave's zero-shuffle scoring projection
-        dsir_arr = _dsir.log_ratio_array(
-            spark.read.parquet(ratio_src), n_buckets=dsir_buckets
-        )
-
-    if bpe_merges_path:
-        bpe_mode = f"path:{_artifact_key(bpe_merges_path)}"
-    elif bpe_train:
-        bpe_mode = f"train:{int(bpe_train)}"
-    else:
-        bpe_mode = "none"
-    bpe_merges: list[tuple[str, str]] | None = None
-    if bpe_mode != "none":
-        from piperider_spark.operators import bpe as _bpe
-
-        if bpe_merges_path:
-            merges_src = bpe_merges_path
-        else:
-            # fit ONCE per staging (the same sidecar contract as dsir_ratio:
-            # meta manifest, reuse gated on the mode string); the artifact
-            # (rank, left, right, merged) is the shippable tokenizer
-            merges_src = os.path.join(output_dir, "bpe_merges")
-            merges_meta_path = os.path.join(merges_src, "_bpe_meta.json")
-            merges_reuse = os.path.exists(os.path.join(merges_src, "_SUCCESS"))
-            if merges_reuse:
-                try:
-                    with open(merges_meta_path) as fh:
-                        merges_reuse = json.load(fh) == {"mode": bpe_mode}
-                except (OSError, ValueError):
-                    merges_reuse = False
-            if not merges_reuse:
-                fitted = _bpe.train_bpe(
-                    _bpe.bpe_word_counts(
-                        src, "text", min_count=2, top_words=50_000
-                    ),
-                    n_merges=int(bpe_train),
-                )
-                (
-                    _bpe.merges_to_df(spark, fitted)
-                    .coalesce(1)  # ≤ n_merges rows — one tiny file
-                    .write.mode("overwrite")
-                    .parquet(merges_src)
-                )
-                with open(merges_meta_path, "w") as fh:
-                    json.dump({"mode": bpe_mode}, fh)
-        bpe_merges = _bpe.load_merges(spark, merges_src)
-
-    if clf_model_path:
-        clf_mode = f"path:{_artifact_key(clf_model_path)}"
-    elif clf_train:
-        clf_mode = f"train:{int(clf_train)}"
-    else:
-        clf_mode = "none"
-    clf_model: dict | None = None
-    if clf_mode != "none":
-        from piperider_spark.operators import classifier as _clf
-
-        if clf_model_path:
-            model_src = clf_model_path
-        else:
-            # self-distillation, fit ONCE per staging: the frozen spec's
-            # keep labels (one build_decisions pass) train the classifier;
-            # sidecar contract identical to dsir_ratio/bpe_merges
-            model_src = os.path.join(output_dir, "clf_model")
-            clf_meta_path = os.path.join(model_src, "_clf_meta.json")
-            clf_reuse = os.path.exists(os.path.join(model_src, "_SUCCESS"))
-            if clf_reuse:
-                try:
-                    with open(clf_meta_path) as fh:
-                        clf_reuse = json.load(fh) == {"mode": clf_mode}
-                except (OSError, ValueError):
-                    clf_reuse = False
-            if not clf_reuse:
-                labeled = build_decisions(src, spec).select("text", "keep")
-                fitted = _clf.fit_quality_classifier(
-                    labeled, epochs=int(clf_train)
-                )
-                (
-                    _clf.model_to_df(spark, fitted)
-                    .coalesce(1)  # ≤ n_buckets+1 rows — one tiny file
-                    .write.mode("overwrite")
-                    .parquet(model_src)
-                )
-                with open(clf_meta_path, "w") as fh:
-                    json.dump({"mode": clf_mode}, fh)
-        clf_model = _clf.model_from_df(spark.read.parquet(model_src))
-
-    if langid_model_path:
-        langid_mode = f"path:{_artifact_key(langid_model_path)}"
-    elif langid_train:
-        langid_mode = f"train:{int(langid_train)}"
-    else:
-        langid_mode = "none"
-    langid_model: dict | None = None
-    if langid_mode != "none":
-        from piperider_spark.operators import langid_model as _lm
-
-        if langid_model_path:
-            lm_src = langid_model_path
-        else:
-            # distill the frozen heuristic's lang labels, fit ONCE per
-            # staging — sidecar contract identical to clf_model
-            lm_src = os.path.join(output_dir, "langid_model")
-            lm_meta_path = os.path.join(lm_src, "_langid_meta.json")
-            lm_reuse = os.path.exists(os.path.join(lm_src, "_SUCCESS"))
-            if lm_reuse:
-                try:
-                    with open(lm_meta_path) as fh:
-                        lm_reuse = json.load(fh) == {"mode": langid_mode}
-                except (OSError, ValueError):
-                    lm_reuse = False
-            if not lm_reuse:
-                labeled = build_decisions(src, spec).select("text", "lang")
-                fitted = _lm.fit_langid_model(
-                    labeled, label_col="lang", epochs=int(langid_train)
-                )
-                (
-                    _lm.langid_model_to_df(spark, fitted)
-                    .coalesce(1)  # K×(n_buckets+1) rows — one tiny file
-                    .write.mode("overwrite")
-                    .parquet(lm_src)
-                )
-                with open(lm_meta_path, "w") as fh:
-                    json.dump({"mode": langid_mode}, fh)
-        langid_model = _lm.langid_model_from_df(spark.read.parquet(lm_src))
-
-    substr_mode = (
-        f"bloom:{_artifact_key(substr_bloom_history)}" if substr_bloom_history else "none"
-    )
-    substr_bloom: dict | None = None
-    if substr_bloom_history:
-        from piperider_spark.operators.dedup import load_bloom as _load_bloom
-
-        substr_bloom = _load_bloom(substr_bloom_history)
-        if substr_bloom.get("grain") != "window":
-            raise ValueError(
-                f"--substr-bloom-history needs a window-grain artifact "
-                f"(build_window_bloom), got grain="
-                f"{substr_bloom.get('grain', 'fingerprint')!r} from "
-                f"{substr_bloom_history}"
-            )
-
-    # ONE broadcast of the (potentially GB-scale) bitset for the whole
-    # run — window_seen_stats would otherwise re-broadcast it every wave
-    substr_bits_bc = (
-        spark.sparkContext.broadcast(substr_bloom["bits"]) if substr_bloom else None
-    )
+    # each active stage reads a supplied artifact or fits its sidecar once
+    # per staging+mode, then loads what its per-wave projection needs
+    state: dict[str, Any] = {}
+    for s in active:
+        path = s.artifact or os.path.join(output_dir, s.sidecar)
+        if s.artifact is None:
+            _sidecar(path, s.name, {"mode": s.mode}, functools.partial(s.fit, src))
+        state[s.name] = s.load(path)
 
     spec_sig = _spec_sig(spec)
     done: set[int] = set()
     if resume and os.path.isdir(lineage_path):
         try:
-            # mergeSchema: lineage written before the conv_rollup column
-            # existed must still read (missing column ⇒ null ⇒ no rollup)
+            # mergeSchema: lineage written before a column existed must
+            # still read
             lin = spark.read.option("mergeSchema", "true").parquet(lineage_path)
 
-            def _flag(name: str) -> F.Column:
-                # lineage written before a column existed reads as absent /
-                # null under mergeSchema — treat as "flag was off"
+            def recorded(name: str, default: Any) -> F.Column:
+                # a column absent from older lineage, or NULL in it, reads
+                # as the default it was produced under
                 if name in lin.columns:
-                    return F.coalesce(F.col(name), F.lit(False))
-                return F.lit(False)
+                    return F.coalesce(F.col(name), F.lit(default))
+                return F.lit(default)
 
-            ts_col = (
-                F.coalesce(F.col("ts"), F.lit(0.0))
-                if "ts" in lin.columns
-                else F.lit(0.0)
-            )
-            if "dedup_mode" in lin.columns:
-                mode_col = F.coalesce(F.col("dedup_mode"), F.lit("none"))
-            elif "conv_dedup" in lin.columns:  # pre-mode lineage: boolean flag
-                mode_col = F.when(_flag("conv_dedup"), F.lit("exact")).otherwise(
-                    F.lit("none")
-                )
-            else:
-                mode_col = F.lit("none")
+            fields = {f"{s.name}_mode": recorded(f"{s.name}_mode", "none") for s in stages}
+            if "dedup_mode" not in lin.columns:  # pre-mode lineage: boolean flag
+                flag = recorded("conv_dedup", False)
+                fields["dedup_mode"] = F.when(flag, "exact").otherwise("none")
+            fields["spec_sig"] = recorded("spec_sig", _spec_sig(DEFAULT_SPEC))
+            fields["conv_rollup"] = recorded("conv_rollup", False)
+            fields["rollup_frac"] = recorded("rollup_frac", 0.5)
             # Judge each bucket by its LATEST lineage row only: lineage is
             # append-only, so after a mode flip (e.g. dedup on → off → on)
-            # BOTH mode values exist for a bucket, but decisions/ holds
-            # only the most recent processing's content. A bucket is done
-            # iff that latest processing used the same dedup mode (dedup
-            # changes decision rows themselves) and, when conv_rollup is
-            # requested, also produced the rollup output.
-            dsir_col = (
-                F.coalesce(F.col("dsir_mode"), F.lit("none"))
-                if "dsir_mode" in lin.columns
-                else F.lit("none")
-            )
-            substr_col = (
-                F.coalesce(F.col("substr_mode"), F.lit("none"))
-                if "substr_mode" in lin.columns
-                else F.lit("none")
-            )
-            bpe_col = (
-                F.coalesce(F.col("bpe_mode"), F.lit("none"))
-                if "bpe_mode" in lin.columns
-                else F.lit("none")
-            )
-            clf_col = (
-                F.coalesce(F.col("clf_mode"), F.lit("none"))
-                if "clf_mode" in lin.columns
-                else F.lit("none")
-            )
-            langid_col = (
-                F.coalesce(F.col("langid_mode"), F.lit("none"))
-                if "langid_mode" in lin.columns
-                else F.lit("none")
-            )
-            # lineage written before these columns existed reads as the
-            # defaults it was produced under (DEFAULT_SPEC / 0.5) — the
-            # same back-compat rule as the mode columns
-            spec_col = (
-                F.coalesce(F.col("spec_sig"), F.lit(_spec_sig(DEFAULT_SPEC)))
-                if "spec_sig" in lin.columns
-                else F.lit(_spec_sig(DEFAULT_SPEC))
-            )
-            frac_col = (
-                F.coalesce(F.col("rollup_frac"), F.lit(0.5))
-                if "rollup_frac" in lin.columns
-                else F.lit(0.5)
-            )
+            # both mode values exist for a bucket, but decisions/ holds
+            # only the most recent processing's content.
             last = lin.groupBy("bucket").agg(
                 F.max_by(
-                    F.struct(
-                        _flag("conv_rollup").alias("r"),
-                        mode_col.alias("m"),
-                        dsir_col.alias("d"),
-                        substr_col.alias("sb"),
-                        bpe_col.alias("bp"),
-                        clf_col.alias("cl"),
-                        langid_col.alias("li"),
-                        spec_col.alias("sp"),
-                        frac_col.alias("rf"),
-                    ),
-                    ts_col,
+                    F.struct(*(c.alias(k) for k, c in fields.items())),
+                    recorded("ts", 0.0),
                 ).alias("s")
             )
-            ok = (
-                (F.col("s.m") == F.lit(dedup_mode))
-                & (F.col("s.d") == F.lit(dsir_mode))
-                & (F.col("s.sb") == F.lit(substr_mode))
-                & (F.col("s.bp") == F.lit(bpe_mode))
-                & (F.col("s.cl") == F.lit(clf_mode))
-                & (F.col("s.li") == F.lit(langid_mode))
-                # decisions depend on the rule thresholds themselves: a
-                # changed RuleSpec must reprocess every bucket
-                & (F.col("s.sp") == F.lit(spec_sig))
-                & (F.col("s.r") | F.lit(not conv_rollup))
+            # decisions depend on the rule thresholds themselves: a changed
+            # RuleSpec must reprocess every bucket
+            ok = F.col("s.spec_sig") == F.lit(spec_sig)
+            for s in stages:
+                ok &= F.col(f"s.{s.name}_mode") == F.lit(s.mode)
+            if conv_rollup:
                 # the rollup threshold shapes conversations/ content; only
                 # binding when the rollup is requested
-                & ((F.col("s.rf") == F.lit(float(conv_min_keep_frac))) | F.lit(not conv_rollup))
-            )
+                ok &= F.col("s.conv_rollup") & (
+                    F.col("s.rollup_frac") == F.lit(float(conv_min_keep_frac))
+                )
             done = {r["bucket"] for r in last.where(ok).collect()}
         except Exception:
             done = set()
 
+    out_cols = [
+        "bucket", "conv_id", "turn_idx", "role", "ts",
+        "keep", "reasons", "lang", "ppl", "text_scrubbed",
+        *(c for s in active for c in s.out_cols),
+    ]
+    lineage_row = (conv_rollup, *(s.mode for s in stages), spec_sig, float(conv_min_keep_frac))
+    lineage_schema = (
+        "run_id string, bucket int, elapsed_ms long, conv_rollup boolean, "
+        + "".join(f"{s.name}_mode string, " for s in stages)
+        + "spec_sig string, rollup_frac double, ts double"
+    )
     todo = [b for b in range(n_buckets) if b not in done]
     processed = 0
     # Process pending buckets in waves: ONE job per wave (not per bucket — a
@@ -847,66 +810,8 @@ def run_pipeline(
         t0 = time.time()
         # partition-column predicate → directory pruning at the scan
         part = src.where(F.col("bucket").isin(wave))
-        if dedup_mode != "none":
-            # explicit schema: a dup-free corpus writes a file-less sidecar
-            # (only _SUCCESS), which schema inference cannot read
-            dup_wave = (
-                spark.read.schema(dup_schema)
-                .parquet(dup_convs_path)
-                .where(F.col("bucket").isin(wave))
-                .select("conv_id")
-            )
-            # left-anti on conv_id: both sides pruned to this wave's
-            # buckets; no broadcast hint — the dup list is usually tiny
-            # (AQE broadcasts it) but is corpus-shaped in the worst case
-            part = part.join(dup_wave, "conv_id", "left_anti")
-        if dsir_arr is not None:
-            # zero-shuffle projection: the fitted table rides the plan as
-            # one array literal (dsir.dsir_score_col), no per-wave joins
-            from piperider_spark.operators.dsir import dsir_score_col
-
-            part = part.withColumn("dsir_score", dsir_score_col("text", dsir_arr))
-        if substr_bloom is not None:
-            # zero-shuffle projection: row-local window hashes + broadcast
-            # bitset probe (operators/dedup.window_seen_stats), no join
-            # against the archive
-            from piperider_spark.operators.dedup import window_seen_stats
-
-            part = (
-                window_seen_stats(
-                    part,
-                    substr_bloom,
-                    k_tokens=int(substr_bloom["k_tokens"]),
-                    bits_bc=substr_bits_bc,
-                )
-                .withColumnRenamed("seen_frac", "substr_seen_frac")
-                .drop("n_tokens", "seen_windows", "seen_token_cov")
-            )
-        if bpe_merges is not None:
-            # zero-shuffle projection: JVM pre-tokenize + one Arrow crossing
-            # returning only the count (operators/bpe.bpe_subword_count_col)
-            # — the frozen tokenizer rides every wave's plan, no joins
-            from piperider_spark.operators.bpe import bpe_subword_count_col
-
-            part = part.withColumn(
-                "n_bpe_subwords", bpe_subword_count_col(bpe_merges, "text")
-            )
-        if clf_model is not None:
-            # zero-shuffle projection: weight-array-literal sigmoid fold
-            # (operators/classifier.classifier_score_col), no joins
-            from piperider_spark.operators.classifier import classifier_score_col
-
-            part = part.withColumn(
-                "clf_score", classifier_score_col("text", clf_model)
-            )
-        if langid_model is not None:
-            # zero-shuffle projection: staged prefix → gram buckets →
-            # one margins fold (operators/langid_model.langid_scored);
-            # the frozen `lang` column is untouched — ft_lang rides NEXT
-            # to it (the documented swap seam, observed before cut over)
-            from piperider_spark.operators.langid_model import langid_scored
-
-            part = langid_scored(part, langid_model, "text")
+        for s in active:
+            part = s.apply(part, state[s.name], wave)
         # Make dynamic overwrite EXACT for reprocessed buckets: a mode-flip
         # reprocess that yields ZERO rows for a bucket writes no partition
         # at all, and dynamic overwrite would leave the previous
@@ -915,35 +820,14 @@ def run_pipeline(
         # in `todo` — i.e. NOT committed under the current modes — so
         # purging its partitions is safe; a crash before the lineage append
         # leaves the bucket not-done and it reprocesses.
-        import shutil as _sh
-
-        for _base in (
-            decisions_path,
-            metrics_path,
-            os.path.join(output_dir, "conversations"),
-        ):
-            for _b in wave:
-                _sh.rmtree(os.path.join(_base, f"bucket={_b}"), ignore_errors=True)
+        for base in (decisions_path, metrics_path, conversations_path):
+            for b in wave:
+                shutil.rmtree(os.path.join(base, f"bucket={b}"), ignore_errors=True)
 
         # persist: decisions write AND the metrics groupBy both consume
         # `decided`; without it the fused signals/scrub UDF stage and the
         # lag-window shuffle would execute twice per wave
         decided = build_decisions(part, spec).persist()
-
-        out_cols = [
-            "bucket", "conv_id", "turn_idx", "role", "ts",
-            "keep", "reasons", "lang", "ppl", "text_scrubbed",
-        ]
-        if dsir_arr is not None:
-            out_cols.append("dsir_score")
-        if substr_bloom is not None:
-            out_cols.append("substr_seen_frac")
-        if bpe_merges is not None:
-            out_cols.append("n_bpe_subwords")
-        if clf_model is not None:
-            out_cols.append("clf_score")
-        if langid_model is not None:
-            out_cols.extend(["ft_lang", "ft_lang_prob"])
         (
             decided.select(*out_cols)
             .repartition("bucket")
@@ -960,7 +844,7 @@ def run_pipeline(
             F.sum(F.col(f"r_{name}").cast("long")).alias(f"n_{name}")
             for name in spec.reason_order
         ]
-        (
+        metrics = (
             decided.groupBy("bucket")
             .agg(
                 F.count(F.lit(1)).alias("n_turns"),
@@ -971,97 +855,30 @@ def run_pipeline(
                 *reason_aggs,
             )
             .withColumn("run_id", F.lit(run_id))
-            .repartition("bucket")
-            .write.mode("overwrite")  # dynamic: idempotent under crash-resume
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(metrics_path)
         )
+        # dynamic overwrite: idempotent under crash-resume
+        _write_by_bucket(metrics, metrics_path, "dynamic")
         if conv_rollup:
             # bucket is a pure function of conv_id — recompute it on the
             # conversation-grain rows (no join back to the turn-grain data)
-            (
-                conversation_rollup(decided, conv_min_keep_frac)
-                .withColumn("bucket", _bucket_col(n_buckets))
-                .repartition("bucket")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(os.path.join(output_dir, "conversations"))
+            rollup = conversation_rollup(decided, conv_min_keep_frac)
+            _write_by_bucket(
+                rollup.withColumn("bucket", _bucket_col(n_buckets)),
+                conversations_path,
+                "dynamic",
             )
         decided.unpersist()
 
         elapsed = int((time.time() - t0) * 1000)
-        lineage_rows = spark.createDataFrame(
-            [
-                (
-                    run_id,
-                    b,
-                    elapsed,
-                    conv_rollup,
-                    dedup_mode,
-                    dsir_mode,
-                    substr_mode,
-                    bpe_mode,
-                    clf_mode,
-                    langid_mode,
-                    spec_sig,
-                    float(conv_min_keep_frac),
-                    time.time(),
-                )
-                for b in wave
-            ],
-            "run_id string, bucket int, elapsed_ms long, conv_rollup boolean, "
-            "dedup_mode string, dsir_mode string, substr_mode string, "
-            "bpe_mode string, clf_mode string, langid_mode string, "
-            "spec_sig string, rollup_frac double, ts double",
-        )
-        lineage_rows.write.mode("append").parquet(lineage_path)
+        spark.createDataFrame(
+            [(run_id, b, elapsed, *lineage_row, time.time()) for b in wave],
+            lineage_schema,
+        ).write.mode("append").parquet(lineage_path)
         processed += len(wave)
 
-    if bloom_out:
-        # next epoch's snapshot: history ∪ this corpus' conversation
-        # fingerprints, in the history's bitset layout (first epoch sets
-        # the layout; size it for the archive's growth horizon). Derived
-        # from staged input + the history artifact only — idempotent, so
-        # a resumed/no-op run rewrites the same content (atomic rename).
-        from piperider_spark.operators.dedup import (
-            bloom_or,
-            build_fingerprint_bloom,
-            load_bloom,
-            save_bloom,
-        )
-        from piperider_spark.operators.dedup import conversation_text as _conv_text
-
-        hist = load_bloom(bloom_history) if bloom_history else None
-        cur = build_fingerprint_bloom(
-            _conv_text(src, sep="\x1e"),
-            text_col="conv_text",
-            expected=None if hist else bloom_expected,
-            fpp=hist["fpp"] if hist else 0.01,
-            layout=(hist["m_bits"], hist["k"]) if hist else None,
-        )
-        save_bloom(bloom_or(hist, cur) if hist else cur, bloom_out)
-
-    if substr_bloom_out:
-        # window-grain epoch snapshot: history ∪ this corpus' turn windows
-        # (same idempotent derived-from-staged contract as bloom_out);
-        # epoch 1 sets k_tokens + layout, later epochs inherit both
-        from piperider_spark.operators.dedup import (
-            bloom_or as _wb_or,
-            build_window_bloom as _wb_build,
-            save_bloom as _wb_save,
-        )
-
-        wh = substr_bloom  # already loaded + grain-checked above
-        cur_w = _wb_build(
-            src,
-            k_tokens=int(wh["k_tokens"]) if wh else substr_bloom_k,
-            expected=None if wh else substr_bloom_expected,
-            fpp=wh["fpp"] if wh else 0.01,
-            layout=(wh["m_bits"], wh["k"]) if wh else None,
-        )
-        _wb_save(_wb_or(wh, cur_w) if wh else cur_w, substr_bloom_out)
+    for s in stages:
+        if s.finish:
+            s.finish(src, state.get(s.name))
 
     return PipelineResult(
         run_id=run_id,
@@ -1072,12 +889,6 @@ def run_pipeline(
         metrics_path=metrics_path,
         lineage_path=lineage_path,
     )
-
-
-def run_pipeline_single_pass(spark: SparkSession, input_path: str, spec: RuleSpec = DEFAULT_SPEC) -> DataFrame:
-    """One-job variant (no checkpointing) used by the bench harness: the
-    whole table through build_decisions, returning the decided DataFrame."""
-    return build_decisions(read_input(spark, input_path), spec)
 
 
 def main() -> None:  # pragma: no cover — spark-submit entry

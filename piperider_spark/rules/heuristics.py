@@ -36,7 +36,7 @@ def rule_columns(spec: RuleSpec = DEFAULT_SPEC) -> dict[str, Column]:
     The duplicate_turn rule needs the lag window and is added by
     ``apply_rules`` (it is the only rule that is not row-local). The langid /
     perplexity rules consume the ``lang`` / ``ppl`` columns produced by
-    ``signals.with_signals``.
+    the fused signal UDF (``signals.udfs.make_process_udf``).
     """
     text = F.col("text")
     role = F.col("role")

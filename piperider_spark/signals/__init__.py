@@ -1,2 +1,1 @@
 from piperider_spark.signals.core import detect_lang_batch, perplexity_batch  # noqa: F401
-from piperider_spark.signals.udfs import lang_id_udf, perplexity_udf, with_signals  # noqa: F401

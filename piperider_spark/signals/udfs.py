@@ -9,57 +9,8 @@ KenLM model file would have (lazy per-executor load), per SURVEY.md §2.10.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
-
-from piperider_spark.signals.core import (
-    detect_lang_batch,
-    perplexity_batch,
-    text_signals_and_ppl_batch,
-    text_signals_batch,
-    token_stats_batch,
-)
-
-
-@pandas_udf(StringType())
-def lang_id_udf(texts: pd.Series) -> pd.Series:
-    return detect_lang_batch(texts)
-
-
-@pandas_udf(DoubleType())
-def perplexity_udf(texts: pd.Series) -> pd.Series:
-    return perplexity_batch(texts)
-
-
-_SIG_TYPE = StructType(
-    [
-        StructField("lang", StringType()),
-        StructField("ppl", DoubleType()),
-        StructField("n_tok", LongType()),
-        StructField("rep_ratio", DoubleType()),
-    ]
-)
-
-
-@pandas_udf(_SIG_TYPE)
-def signals_udf(texts: pd.Series) -> pd.DataFrame:
-    """All per-turn text signals from ONE Arrow crossing AND one shared
-    tokenize/factorize (langid + token stats; perplexity is char-level).
-    Uses the FUSED batch (one fillna/lower pass feeding tokenizer and ppl
-    cleaner) — two separate batch calls paid the text conversion twice per
-    Arrow batch (review finding; make_process_udf already fuses)."""
-    sig = text_signals_and_ppl_batch(texts)
-    return pd.DataFrame(
-        {
-            "lang": sig["lang"],
-            "ppl": sig["ppl"],
-            "n_tok": sig["n_tok"],
-            "rep_ratio": sig["rep_ratio"],
-        }
-    )
-
 
 _PROCESS_TYPE = StructType(
     [
@@ -138,25 +89,3 @@ def make_process_udf(spec):
 
     _PROCESS_UDF_CACHE[spec] = process_udf
     return process_udf
-
-
-def lang_id_col(text: Column | str = "text") -> Column:
-    return lang_id_udf(F.col(text) if isinstance(text, str) else text)
-
-
-def perplexity_col(text: Column | str = "text") -> Column:
-    return perplexity_udf(F.col(text) if isinstance(text, str) else text)
-
-
-def with_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach lang + ppl columns via the fused struct UDF (one python-worker
-    stage, one text transfer)."""
-    sig = signals_udf(F.col(text_col))
-    return df.withColumn("_sig", sig).withColumns(
-        {
-            "lang": F.col("_sig.lang"),
-            "ppl": F.col("_sig.ppl"),
-            "n_tok": F.col("_sig.n_tok"),
-            "rep_ratio": F.col("_sig.rep_ratio"),
-        }
-    ).drop("_sig")

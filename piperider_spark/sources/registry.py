@@ -76,7 +76,13 @@ class DataSource:
         candidates = [
             (os.path.join(self.path, f"{table}{ext}"), fmt)
             for ext, fmt in _EXTENSIONS.items()
-        ] + [(os.path.join(self.path, table), self.fmt)]
+        ] + [
+            # a bare name that carries its own extension reads by it
+            (
+                os.path.join(self.path, table),
+                _EXTENSIONS.get(os.path.splitext(table)[1], self.fmt),
+            )
+        ]
         for cand, fmt in candidates:
             if os.path.exists(cand):
                 return cand, fmt

@@ -152,7 +152,13 @@ def with_streaming_dup_flag(
     module header used to claim the watermark evicts this state; it does
     not — only timeouts evict applyInPandasWithState state). The same
     AvailableNow caveat as :func:`stream_exact_dedup` applies: leave the
-    TTL unset for drain-style runs."""
+    TTL unset for drain-style runs.
+
+    Input contract: ``turn_idx`` is unique within a conversation. A
+    duplicate ``turn_idx`` is undefined here as in batch
+    (``pipeline.build_decisions``): within one micro-batch the repeat
+    takes the late-arrival path and is never flagged, while batch lag-1
+    compares the tied rows in an unspecified order."""
     ttl = _ttl_ms(state_ttl)
     return stream_df.groupBy("conv_id").applyInPandasWithState(
         _make_dup_state_fn(ttl),

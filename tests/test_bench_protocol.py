@@ -64,3 +64,33 @@ def test_bandwidth_probe_smoke():
     gbs = bandwidth_probe(mb=32, reps=2)
     assert gbs > 0.5
     assert time.time() - t0 < 15
+
+
+def test_scaling_measurement_runs_end_to_end(monkeypatch):
+    """The whole scaling protocol with every leg, probe and sleep stubbed:
+    a NameError anywhere in the orchestration (the warm-up once called
+    transcripts_path with an undefined name) fails here instead of in the
+    bench run."""
+    import subprocess
+    import time
+
+    import bench
+
+    materialized = []
+
+    def fake_run(cmd, **kwargs):
+        return subprocess.CompletedProcess(
+            cmd, 0, stdout='{"turns_per_sec": 1000.0}\n', stderr=""
+        )
+
+    monkeypatch.setattr(bench.subprocess, "run", fake_run)
+    monkeypatch.setattr(
+        bench, "transcripts_path", lambda n_turns, seed=42: materialized.append(n_turns)
+    )
+    monkeypatch.setattr(bench, "bandwidth_probe", lambda *a, **k: 10.0)
+    monkeypatch.setattr(time, "sleep", lambda s: None)
+
+    out = bench.scaling_measurement()
+    assert materialized == [bench.SCALING_TURNS]
+    assert out["pair_ratios"] == [0.25] * bench.SCALING_PAIRS
+    assert out["efficiency"] == 0.25

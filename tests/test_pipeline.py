@@ -1166,3 +1166,122 @@ def test_artifact_key_tracks_content(tmp_path):
     kd1 = _artifact_key(str(d))
     (d / "part-1.parquet").write_bytes(b"bbb")
     assert _artifact_key(str(d)) != kd1
+
+
+@pytest.mark.parametrize(
+    "arg",
+    [
+        "bloom_history",
+        "dsir_ratio_path",
+        "substr_bloom_history",
+        "bpe_merges_path",
+        "clf_model_path",
+        "langid_model_path",
+    ],
+)
+def test_missing_artifact_fails_before_staging(spark, tmp_path, arg):
+    """A mistyped artifact path raises a FileNotFoundError naming the
+    argument and the path, before the staging write runs."""
+    import os
+
+    inp = str(tmp_path / "t.parquet")
+    _write_pdf(generate_transcripts(40, seed=35), inp)
+    out = str(tmp_path / "out")
+    missing = str(tmp_path / "no_such_artifact")
+    with pytest.raises(FileNotFoundError) as err:
+        run_pipeline(spark, inp, out, n_buckets=2, **{arg: missing})
+    assert arg in str(err.value) and missing in str(err.value)
+    assert not os.path.exists(os.path.join(out, "staged"))
+
+
+def _short_convs(pdf: pd.DataFrame, max_turns: int = 12) -> pd.DataFrame:
+    """Split each conversation into pieces of at most ``max_turns`` turns:
+    near dedup shingles whole conversations, and datagen's Zipf lengths
+    reach thousands of turns."""
+    out = pdf.copy()
+    out["conv_id"] = out["conv_id"] + "." + (out["turn_idx"] // max_turns).astype(str)
+    out["turn_idx"] = out["turn_idx"] % max_turns
+    return out
+
+
+def test_every_stage_composes_and_restage_refits_every_sidecar(spark, tmp_path):
+    """Every optional stage on at once: a same-flags resume processes no
+    bucket, decisions/ carries the base columns plus each stage's columns
+    in stage order, and an input change rewrites every fitted sidecar."""
+    from piperider_spark.operators.dedup import (
+        build_fingerprint_bloom,
+        build_window_bloom,
+        conversation_text,
+        save_bloom,
+    )
+    from piperider_spark.pipeline import _artifact_key
+
+    a = _short_convs(generate_transcripts(400, seed=325))
+    copies = a[a["conv_id"] == a["conv_id"].max()].copy()
+    copies["conv_id"] = copies["conv_id"] + "_copy"
+    inp = str(tmp_path / "t.parquet")
+    _write_pdf(pd.concat([a, copies], ignore_index=True), inp)
+    # history = the first conversations of this corpus
+    hist = spark.createDataFrame(a.head(30))
+    bloom = str(tmp_path / "hist.bloom")
+    save_bloom(
+        build_fingerprint_bloom(
+            conversation_text(hist, sep="\x1e"), text_col="conv_text", expected=1000
+        ),
+        bloom,
+    )
+    windows = str(tmp_path / "hist_windows.json")
+    save_bloom(build_window_bloom(hist, k_tokens=5), windows)
+    out = str(tmp_path / "out")
+    flags = dict(
+        n_buckets=2,
+        conv_rollup=True,
+        conv_dedup=True,
+        conv_near_dedup=True,
+        bloom_history=bloom,
+        dsir_fit="role = 'assistant'",
+        dsir_buckets=16,
+        substr_bloom_history=windows,
+        bpe_train=10,
+        clf_train=1,
+        langid_train=1,
+    )
+
+    r1 = run_pipeline(spark, inp, out, **flags)
+    assert r1.buckets_processed == 2
+    methods = {r.method for r in spark.read.parquet(out + "/dup_convs").collect()}
+    assert {"exact", "bloom_history"} <= methods
+    r2 = run_pipeline(spark, inp, out, **flags)
+    assert (r2.buckets_processed, r2.buckets_skipped) == (0, 2)
+    assert spark.read.parquet(r1.decisions_path).columns == [
+        "conv_id", "turn_idx", "role", "ts", "keep", "reasons", "lang", "ppl",
+        "text_scrubbed", "dsir_score", "substr_seen_frac", "n_bpe_subwords",
+        "clf_score", "ft_lang", "ft_lang_prob", "bucket",
+    ]
+
+    sidecars = ("dsir_ratio", "bpe_merges", "clf_model", "langid_model", "dup_convs")
+    before = {d: _artifact_key(f"{out}/{d}") for d in sidecars}
+    inp_b = str(tmp_path / "b.parquet")
+    _write_pdf(_short_convs(generate_transcripts(400, seed=126)), inp_b)
+    r3 = run_pipeline(spark, inp_b, out, **flags)
+    assert r3.buckets_processed == 2
+    after = {d: _artifact_key(f"{out}/{d}") for d in sidecars}
+    assert [d for d in sidecars if after[d] == before[d]] == []
+
+
+def test_lineage_schema_is_pinned(spark, tmp_path):
+    """Output dirs written by earlier versions resume only while the
+    lineage columns keep their names, types and order."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    inp = str(tmp_path / "t.parquet")
+    _write_pdf(generate_transcripts(40, seed=35), inp)
+    r = run_pipeline(spark, inp, str(tmp_path / "out"), n_buckets=2)
+    want = _parse_datatype_string(
+        "run_id string, bucket int, elapsed_ms long, conv_rollup boolean, "
+        "dedup_mode string, dsir_mode string, substr_mode string, "
+        "bpe_mode string, clf_mode string, langid_mode string, "
+        "spec_sig string, rollup_frac double, ts double"
+    )
+    got = spark.read.parquet(r.lineage_path).schema
+    assert [(f.name, f.dataType) for f in got] == [(f.name, f.dataType) for f in want]

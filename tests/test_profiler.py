@@ -742,3 +742,14 @@ def test_csv_reader_user_options_override(spark, tmp_path):
     # duplicate basenames list once
     (tmp_path / "t.json").write_text('{"a": 1}\n')
     assert DataSource("s", path=str(tmp_path)).list_tables(spark) == ["t"]
+
+
+def test_read_table_bare_name_with_extension_uses_its_reader(spark, tmp_path):
+    """A table named with its own extension (``events.csv``) on a
+    parquet-default source must be parsed by the CSV reader, not parquet."""
+    from piperider_spark.sources.registry import DataSource
+
+    (tmp_path / "events.csv").write_text("id,kind\n1,open\n2,close\n")
+    df = DataSource("s", path=str(tmp_path)).read_table(spark, "events.csv")
+    assert df.columns == ["id", "kind"]
+    assert sorted(r.kind for r in df.collect()) == ["close", "open"]
